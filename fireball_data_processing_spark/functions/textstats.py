@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from fireball_data_processing_spark import sizing
+
 # ---------------------------------------------------------------------
 # token counting (F17: the reference estimates tokens as chars/4)
 # ---------------------------------------------------------------------
@@ -448,13 +450,15 @@ def bigram_logprob(
 
     from fireball_data_processing_spark.functions.text import normalize_text
 
-    parts = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    pre = docs.select(
-        F.col(id_col),
-        F.filter(
-            F.split(normalize_text(F.col(text_col)), " "), lambda s: s != ""
-        ).alias("__words"),
-    ).repartition(parts, F.col(id_col))
+    pre = sizing.spread(
+        docs.select(
+            F.col(id_col),
+            F.filter(
+                F.split(normalize_text(F.col(text_col)), " "), lambda s: s != ""
+            ).alias("__words"),
+        ),
+        id_col,
+    )
     words = F.col("__words")
     bigrams = F.when(
         F.size(words) >= 2,

@@ -25,8 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-from fireball_data_processing_spark.functions.text import normalize_text  # noqa: E402
+from fireball_data_processing_spark import sizing
+from fireball_data_processing_spark.functions.text import normalize_text
 
 __all__ = [
     "normalize_text", "exact_dedup_groups", "word_shingles",
@@ -102,81 +102,6 @@ def capped_shingles(sh: Column, max_shingles: int) -> Column:
     return F.when(F.size(sh) > max_shingles, sampled).otherwise(sh)
 
 
-def _spread_words(pre: DataFrame, id_col: str) -> DataFrame:
-    """Scale-gated parallelism spreader for pre-explode (id, words)
-    frames (guide §2.4/§2.5 — r12).
-
-    Small/local inputs arrive as one or two scan partitions (a file
-    only splits above ``spark.sql.files.maxPartitionBytes``), so the
-    shingle/gram explode and its per-element hashing would run
-    serially; an id-keyed repartition to the shuffle-partition count
-    fixes that, and downstream doc-grain stages reuse the partitioning.
-
-    At corpus scale the SAME repartition is a pure extra full-corpus
-    shuffle of the word arrays: the scan's byte-based splits already
-    provide the parallelism, and doc-grain aggregates are cheaper
-    unpartitioned (map-side partial combine + a tiny post-combine
-    exchange of per-doc rows instead of a corpus-bytes exchange —
-    guide §2.3, aggregate before you shuffle). So the repartition is
-    GATED on the frame's Catalyst size estimate: applied only while
-    the input could not have produced at least ``shuffle.partitions``
-    scan splits. The probe is driver-side plan metadata — no job runs
-    — and at bench scale the gate always fires, keeping the local plan
-    byte-identical to the unconditional form."""
-    spark = pre.sparkSession
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    jvm = spark.sparkContext._jvm
-    max_pb = int(
-        jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB")
-        )
-    )
-    est = int(pre._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    if est >= parts * max_pb:
-        return pre
-    return pre.repartition(parts, F.col(id_col))
-
-
-def _pin_if_large(df: DataFrame) -> DataFrame:
-    """Scale-gated persist for a frame with MULTIPLE physical consumers
-    (both sides of a self-join, a broadcast build + probe) whose
-    upstream pipeline is expensive at corpus scale (guide §2.4 —
-    duplicated subtrees; the r12 ``prefix_candidates`` lesson).
-
-    At corpus scale, re-executing the upstream per consumer doubles
-    full-corpus passes, so sharing one materialization is the only
-    sane plan. At LOCAL/bench scale the trade inverts: the upstream is
-    seconds of work, the consumers' subtrees execute CONCURRENTLY
-    (broadcast stages overlap the probe-side scan), and a persist
-    serializes them behind one cache-materialization job plus the
-    cache write (measured +50% on the LSH pair queries at sf0.1). So
-    the pin is GATED on the frame's Catalyst size estimate, the same
-    driver-side metadata probe (no job) as :func:`_spread_words`, with
-    the same threshold: pin only when the input is big enough that the
-    scan alone would have produced at least ``shuffle.partitions``
-    splits — i.e. when the duplicated pass would be corpus-sized. At
-    bench scale the gate always declines, keeping the local plan
-    byte-identical to the unpinned form."""
-    if df.isStreaming:
-        return df
-    spark = df.sparkSession
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    jvm = spark.sparkContext._jvm
-    max_pb = int(
-        jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB")
-        )
-    )
-    est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    # Estimates above ~1 EiB are propagated UNKNOWNS, not measurements
-    # (local relations under explode/aggregate multiply out to ~2^65;
-    # file sources always carry real byte counts) — treat unknown as
-    # small rather than pinning every in-memory test frame.
-    if parts * max_pb <= est < (1 << 60):
-        return df.persist()
-    return df
-
-
 def _exploded_shingles(
     df: DataFrame,
     text_col: str,
@@ -188,11 +113,12 @@ def _exploded_shingles(
 
     Plan shape for scale AND local speed:
     1. project (id, words) — the regex/split runs exactly once per doc;
-    2. repartition on the id with an EXPLICIT partition count — the
-       pre-explode rows are tiny, so AQE would coalesce the exchange to one
-       or two partitions and then the 50x explode fan-out runs serially;
-       pinning the count keeps the expansion parallel (and the downstream
-       groupBy(id) reuses the partitioning, so no extra shuffle);
+    2. below corpus scale, repartition on the id with an EXPLICIT
+       partition count (``sizing.spread``) — the pre-explode rows are tiny,
+       so AQE would coalesce the exchange to one or two partitions and then
+       the 50x explode fan-out runs serially; pinning the count keeps the
+       expansion parallel (and the downstream groupBy(id) reuses the
+       partitioning, so no extra shuffle);
     3. explode shingles from the materialized words column.
 
     ``max_shingles`` caps the per-doc shingle count BEFORE the explode via
@@ -203,7 +129,7 @@ def _exploded_shingles(
     contribute a deterministic uniform sample, so signatures/Jaccard become
     (tight) estimates for those docs only.
     """
-    w = _spread_words(
+    w = sizing.spread(
         df.select(
             F.col(id_col),
             F.split(normalize_text(F.col(text_col)), " ").alias("__words"),
@@ -363,14 +289,11 @@ def lsh_candidate_pairs(
       one); the join keys ARE the bucket, so output stays bucket-bounded.
       Right when signatures flow straight from ``minhash_signature`` in a
       one-shot pipeline. The (id, band_idx, band_key) table feeds BOTH
-      join sides; at corpus scale it is pinned (:func:`_pin_if_large`)
+      join sides; at corpus scale it is pinned (``sizing.pin_if_large``)
       so the upstream signature pipeline (scan -> shingle explode ->
       minhash aggregate) executes once instead of once per side — the
       pinned frame is doc×n_bands grain, orders of magnitude narrower
-      than the corpus. At local/bench scale the gate declines the pin
-      (the duplicated subtrees execute concurrently and cost less than
-      serializing behind a cache materialization — measured +50% at
-      sf0.1), keeping the small-scale plan unchanged.
+      than the corpus. At local scale the gate declines the pin.
     - ``grouped=True``: one shuffle on the band key collects each bucket's
       sorted id list and the i<j pairs explode locally inside the bucket —
       the banded table is consumed exactly ONCE. Right when ``sigs`` is a
@@ -411,10 +334,7 @@ def lsh_candidate_pairs(
             .filter(F.col("id_a") < F.col("id_b"))
             .distinct()
         )
-    # Both sides of the self-join read the banded table; at corpus
-    # scale pin it so the upstream signature pipeline executes once
-    # (guide §2.4; gate rationale in _pin_if_large).
-    banded = _pin_if_large(banded)
+    banded = sizing.pin_if_large(banded)
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -754,7 +674,7 @@ def duplicate_spans(
     # re-executes. countDistinct isn't a window function; max(dense_rank
     # ordered by doc) over the gram partition counts distinct docs
     # exactly, with no per-group set buffer.
-    pre = _spread_words(
+    pre = sizing.spread(
         docs.select(
             F.col(id_col),
             F.split(normalize_text(F.col(text_col)), " ").alias("__words"),
@@ -881,7 +801,7 @@ def aligned_segments(
     slice lambda must reference a materialized column — and the explode
     consumer's doc-key stages reuse this partitioning).
     """
-    pre = _spread_words(
+    pre = sizing.spread(
         docs.select(
             F.col(id_col),
             F.filter(
@@ -1059,7 +979,7 @@ def contamination_spans(
     question) -> per-doc gaps-and-islands. Contact is bounded by grams
     literally shared with the benchmark.
     """
-    pre = _spread_words(
+    pre = sizing.spread(
         docs.select(
             F.col(id_col),
             F.split(normalize_text(F.col(text_col)), " ").alias("__words"),
@@ -1144,7 +1064,7 @@ def content_defined_chunks(
     corpus whose every word is a boundary yields 1-word chunks; raise
     ``boundary_mod`` or pre-filter such rows).
     """
-    pre = _spread_words(
+    pre = sizing.spread(
         docs.select(
             F.col(id_col),
             F.filter(

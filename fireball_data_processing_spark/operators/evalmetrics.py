@@ -33,6 +33,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fireball_data_processing_spark import sizing
 from fireball_data_processing_spark.functions.text import normalize_text
 
 __all__ = ["bleu_pairs", "py_bleu", "rbo_at_k"]
@@ -71,8 +72,12 @@ def _occurrence_rows(
     order, from ONE scan of the pairs frame: both word arrays are
     materialized behind a single pair-keyed exchange and both sides'
     tagged grams ride one concat + one explode — the upstream pair
-    construction (often a join) is planned exactly once."""
-    parts = int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    construction (often a join) is planned exactly once.
+
+    Unlike ``sizing.spread``, the exchange is not size-gated: it is the
+    only shuffle of the three pair-keyed aggregates in :func:`bleu_pairs`,
+    which all reuse its partitioning at any scale (without it the metric
+    shuffles three times)."""
     pre = pairs.select(
         F.col(pair_col),
         F.filter(
@@ -81,7 +86,7 @@ def _occurrence_rows(
         F.filter(
             F.split(normalize_text(F.col(ref_col)), " "), lambda s: s != ""
         ).alias("__rw"),
-    ).repartition(parts, F.col(pair_col))
+    ).repartition(sizing.shuffle_partitions(pairs.sparkSession), F.col(pair_col))
     allgrams = F.concat(
         _side_grams("__pw", "p", max_n), _side_grams("__rw", "r", max_n)
     )

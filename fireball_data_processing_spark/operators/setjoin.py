@@ -91,7 +91,7 @@ def prefix_candidates(
     measured ~2x on the sf0.1 candidate stage: 5.2 s -> 2.8 s warm).
 
     Pin policy (r13, VERDICT r12 ask #4): the persist stays
-    UNCONDITIONAL, unlike the ``_pin_if_large``-gated LSH/winnow pins —
+    UNCONDITIONAL, unlike the ``pin_if_large``-gated LSH/winnow pins —
     re-A/B'd this round (interleaved, min-of-4): gated = unpinned
     locally = 4.41 s vs pinned 3.86 s. The gate's decline-at-local-scale
     rationale is that a broadcast BUILD subtree overlaps the PROBE-side

@@ -6946,19 +6946,15 @@ def q_winnow_copy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fireball_data_processing_spark.functions.textstats import (
         winnow_fingerprints,
     )
-
-    from fireball_data_processing_spark.operators.dedup import (
-        _pin_if_large,
-    )
+    from fireball_data_processing_spark.sizing import pin_if_large
 
     d = load_table(spark, sf_dir, "documents")
     # the fingerprint table feeds BOTH sides of the self-join; at corpus
     # scale pin it so the winnowing pipeline (gram hashes +
-    # rolling-window argmin) runs once (guide §2.4 — the
-    # lsh_candidate_pairs/prefix_candidates lesson; gate rationale in
-    # _pin_if_large). The cache is the (doc_id, fingerprint) index
-    # itself, ~1/window of the gram count.
-    fps = _pin_if_large(winnow_fingerprints(d, k=4, window=4))
+    # rolling-window argmin) runs once (the lsh_candidate_pairs lesson;
+    # gate rationale in pin_if_large). The cache is the
+    # (doc_id, fingerprint) index itself, ~1/window of the gram count.
+    fps = pin_if_large(winnow_fingerprints(d, k=4, window=4))
     a = fps.select(F.col("doc_id").alias("id_a"), "fingerprint")
     b = fps.select(F.col("doc_id").alias("id_b"), "fingerprint")
     return (

@@ -19,8 +19,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults match the driver harness: local[$SPARK_GRAFT_CPUS].
-_DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# Default parallelism: local[$SPARK_GRAFT_CPUS], else every core this host
+# has.
+_DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 
 def get_spark(
@@ -41,7 +42,7 @@ def get_spark(
         # --- shuffle sizing ---------------------------------------------
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or int(_DEFAULT_CPUS) * 2),
+            str(shuffle_partitions or _DEFAULT_CPUS * 2),
         )
         # --- scan split sizing: explicit so the 100-TB math is visible —
         #     128 MiB splits keep a task's working set inside executor

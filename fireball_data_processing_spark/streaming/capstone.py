@@ -19,7 +19,7 @@ DuckDB statement and hash-compares the final table).
 
 100 TB shape: the gate is a SIZE-AWARE anti-join against the hash
 index — broadcast-hinted only while the index's Catalyst size estimate
-fits the session broadcast threshold (:func:`should_broadcast_index`),
+fits the session broadcast threshold (``sizing.broadcast_if_small``),
 shuffled left-anti above it, because a true-corpus-scale index is
 billions of hashes and an unconditional broadcast hint would OOM every
 executor (at that scale prefer the band-partitioned near-dup index,
@@ -48,6 +48,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fireball_data_processing_spark import sizing
 from fireball_data_processing_spark.functions.textstats import gopher_rules
 from fireball_data_processing_spark.streaming.dedup_stream import (
     content_hash,
@@ -60,7 +61,6 @@ from fireball_data_processing_spark.streaming.sinks_stream import (
 
 __all__ = [
     "stage_incoming_slices",
-    "should_broadcast_index",
     "ingest_pipeline_batch",
     "run_ingest_pipeline",
     "run_ingest_pipeline_from_stream",
@@ -87,60 +87,6 @@ def _gate_exprs(min_words: int) -> tuple[F.Column, F.Column, F.Column]:
             content_hash(),
         )
     return hit
-
-
-def should_broadcast_index(index: DataFrame) -> bool:
-    """Size-aware broadcast decision for the static gate index: compare
-    Catalyst's optimized-plan size estimate against the session's
-    ``spark.sql.autoBroadcastJoinThreshold``. Driver-side metadata only
-    — no job runs (``localCheckpoint`` preserves the origin plan's
-    stats, so a pinned index still reports its true estimate).
-
-    Why not hint unconditionally: at true corpus scale the exact-dup
-    hash index is billions of 32-byte hashes — an unconditional
-    ``F.broadcast`` would OOM every executor. Below the threshold the
-    hint is kept (the index is known-compact, don't make AQE guess);
-    above it — or when broadcasting is disabled with ``-1`` — the gate
-    degrades to a plain left-anti join and Catalyst/AQE pick a shuffled
-    strategy sized to reality."""
-    spark = index.sparkSession
-    raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    if raw.strip().startswith("-"):  # -1 = broadcasting disabled
-        return False
-    jvm = spark.sparkContext._jvm
-    threshold = int(
-        jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw)
-    )
-    est = int(
-        index._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    )
-    return est <= threshold
-
-
-def _single_split_batch(batch_df: DataFrame) -> bool:
-    """True when the micro-batch's Catalyst size estimate fits ONE scan
-    split (``spark.sql.files.maxPartitionBytes``) — i.e. the batch
-    already executes as a single task, so collapsing the per-batch
-    aggregate to one partition costs no parallelism and removes its
-    shuffle exchange outright (guide §2.4). Driver-side metadata probe
-    only — no job, no plan→RDD conversion (the ``_pin_if_large`` /
-    ``should_broadcast_index`` idiom). A file-source micro-batch always
-    carries real byte counts; estimates above ~1 EiB are propagated
-    unknowns — treat as LARGE (decline the fast path) rather than
-    serializing a corpus-sized batch through one task."""
-    if batch_df.isStreaming:  # only meaningful for materialized batches
-        return False
-    spark = batch_df.sparkSession
-    jvm = spark.sparkContext._jvm
-    max_pb = int(
-        jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB")
-        )
-    )
-    est = int(
-        batch_df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    )
-    return est <= max_pb  # unknowns (~2^64) always exceed max_pb
 
 
 def stage_incoming_slices(
@@ -208,7 +154,7 @@ def ingest_pipeline_batch(
     - ``"exact"`` — ``index`` is :func:`~...dedup_stream.corpus_hash_index`
       output; size-aware anti-join on the normalized-content md5:
       broadcast-hinted only while the index's plan-stats estimate fits
-      the session broadcast threshold (:func:`should_broadcast_index`),
+      the session broadcast threshold (``sizing.broadcast_if_small``),
       plain left-anti (shuffled, AQE-planned) above it — a
       billion-hash corpus index must never be forced onto executors.
       ``broadcast_index`` overrides the auto decision (callers running
@@ -233,25 +179,23 @@ def ingest_pipeline_batch(
     parallelism.
     """
     n_words_col, passes_col, hash_col = _gate_exprs(min_words)
-    # Single-split fast path (exact gate only): a staged slice file below
-    # maxPartitionBytes arrives as ONE scan partition, so the per-batch
-    # (source, lang) aggregate's shuffle exchange moves zero-parallelism
-    # data — coalesce(1) before the groupBy satisfies the aggregate's
-    # clustering requirement with SinglePartition and the planner drops
-    # the Exchange (and with it one AQE query-stage job PER EPOCH; plan
-    # fact in plans/r13/streaming_ingest_pipeline_after.txt). Gated on
-    # the batch's size estimate: a corpus-scale batch keeps the
-    # distributed aggregate (its partial-agg shuffle is taxonomy-sized
-    # and its map side needs every scan split). The near gate never
-    # takes this path — its min_parallelism repartition exists to fan
-    # the per-row MinHash out, and a pre-aggregate coalesce(1) would
-    # fuse upstream and serialize exactly that work.
-    single_task = gate == "exact" and _single_split_batch(batch_df)
     if gate == "exact":
-        keyed = batch_df.withColumn("content_hash", hash_col)
         if broadcast_index is None:
-            broadcast_index = should_broadcast_index(index)
-        right = F.broadcast(index) if broadcast_index else index
+            right = sizing.broadcast_if_small(index)
+        else:
+            right = F.broadcast(index) if broadcast_index else index
+        # Single-split fast path, broadcast gate only: a staged slice file
+        # below maxPartitionBytes arrives as ONE scan partition, so the
+        # (source, lang) aggregate's shuffle moves zero-parallelism data.
+        # coalesce(1) on the batch flows through the broadcast anti-join
+        # and gives the groupBy its clustering, so the planner drops the
+        # Exchange and one AQE query-stage job per epoch. A shuffled
+        # anti-join gains nothing from it: it re-partitions the batch. The
+        # near gate never collapses: its min_parallelism repartition exists
+        # to fan the per-row MinHash out.
+        if right is not index:
+            batch_df = sizing.collapse_if_one_split(batch_df)
+        keyed = batch_df.withColumn("content_hash", hash_col)
         fresh = keyed.join(right, "content_hash", "left_anti")
     elif gate == "near":
         if min_parallelism is not None and min_parallelism > 1:
@@ -260,8 +204,6 @@ def ingest_pipeline_batch(
     else:
         raise ValueError(f"unknown gate {gate!r}; expected 'exact' or 'near'")
     gated = fresh.withColumn("n_words", n_words_col).filter(passes_col)
-    if single_task:
-        gated = gated.coalesce(1)
     return gated.groupBy("source", "lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_words").cast("bigint").alias("n_tokens"),
@@ -323,7 +265,7 @@ def run_ingest_pipeline_from_stream(
     static for the stream's lifetime, so per-epoch re-checks would be
     pure driver overhead. Exactly-once/restart semantics as in
     :func:`run_ingest_pipeline`."""
-    bcast = should_broadcast_index(index) if gate == "exact" else None
+    bcast = gate == "exact" and sizing.broadcast_if_small(index) is not index
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         partial = ingest_pipeline_batch(

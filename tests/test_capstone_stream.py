@@ -20,9 +20,6 @@ from fireball_data_processing_spark.streaming.dedup_stream import (
 
 import pytest
 
-pytestmark = pytest.mark.slow  # driver-budget split (r13): long
-# end-to-end runs excluded from the default suite; run with -m slow
-
 SMOKE = "/root/testdata/sf0.001"
 MIN_WORDS = 10  # sf0.001 docs are short; the CATALOG query gates at the
 # Gopher default (50) and its oracle hard-codes n_words >= 50 — these
@@ -60,6 +57,7 @@ def _rows(df):
     )
 
 
+@pytest.mark.slow  # runs a stream end to end
 @pytest.mark.parametrize("gate", ["exact", "near"])
 def test_stream_matches_batch_plan(spark, tmp_path, gate):
     corpus, incoming = _fixture(spark)
@@ -79,6 +77,7 @@ def test_stream_matches_batch_plan(spark, tmp_path, gate):
     assert parts.select("batch_id").distinct().count() >= 2
 
 
+@pytest.mark.slow  # runs a stream end to end
 @pytest.mark.parametrize("gate", ["exact", "near"])
 def test_final_table_independent_of_slicing(spark, tmp_path, gate):
     """2 slices vs 5 slices: different micro-batch boundaries, same
@@ -100,6 +99,7 @@ def test_final_table_independent_of_slicing(spark, tmp_path, gate):
     assert results[0] == results[1]
 
 
+@pytest.mark.slow  # runs a stream end to end
 @pytest.mark.parametrize("gate", ["exact", "near"])
 def test_restart_resumes_without_double_counting(spark, tmp_path, gate):
     """Run the stream over the first slices, then stage more and resume
@@ -210,6 +210,7 @@ def test_near_gate_rejects_what_exact_gate_admits(spark):
     assert [r[:2] for r in near] == [("c", "en")]
 
 
+@pytest.mark.slow  # runs a stream end to end
 def test_capstone_query_earlier_frame_survives_reconstruction(spark):
     """ADVICE r10 regression: constructing the catalog query twice
     before collecting the first result must not invalidate the first
@@ -240,9 +241,7 @@ def test_exact_gate_is_size_aware_not_broadcast_pinned(spark):
     import contextlib
     import io
 
-    from fireball_data_processing_spark.streaming.capstone import (
-        should_broadcast_index,
-    )
+    from fireball_data_processing_spark.sizing import broadcast_if_small
 
     def _plan(df) -> str:
         buf = io.StringIO()
@@ -256,21 +255,23 @@ def test_exact_gate_is_size_aware_not_broadcast_pinned(spark):
     saved = spark.conf.get(key)
     try:
         # compact index under the default threshold: broadcast kept
-        assert should_broadcast_index(idx) is True
+        assert broadcast_if_small(idx) is not idx
         plan = _plan(ingest_pipeline_batch(incoming, idx, min_words=MIN_WORDS))
         assert "BroadcastHashJoin" in plan
 
         # index "too big" (threshold floored to 1 byte): no forced hint,
         # Catalyst plans a shuffled anti join
         spark.conf.set(key, "1b")
-        assert should_broadcast_index(idx) is False
+        assert broadcast_if_small(idx) is idx
         plan = _plan(ingest_pipeline_batch(incoming, idx, min_words=MIN_WORDS))
         assert "BroadcastHashJoin" not in plan
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
+        # no single-task fast path above a shuffled anti-join
+        assert "Coalesce" not in plan
 
         # broadcasting disabled outright behaves the same
         spark.conf.set(key, "-1")
-        assert should_broadcast_index(idx) is False
+        assert broadcast_if_small(idx) is idx
 
         # explicit override beats the auto decision (the once-per-stream
         # decision run_ingest_pipeline forwards into every epoch)
@@ -293,6 +294,7 @@ def test_exact_gate_is_size_aware_not_broadcast_pinned(spark):
     assert _rows(shuffled) == _rows(broadcasted)
 
 
+@pytest.mark.slow  # runs a stream end to end
 def test_live_stream_exact_gate_correct_above_broadcast_threshold(spark, tmp_path):
     """The size-aware decision through the REAL stream: with the
     broadcast threshold floored (the 100 TB shape — index 'too big' to
@@ -345,7 +347,7 @@ def test_exact_gate_single_split_agg_is_exchange_free(spark):
     import contextlib
     import io
 
-    from fireball_data_processing_spark.streaming import capstone
+    from fireball_data_processing_spark import sizing
 
     def _plan(df) -> str:
         buf = io.StringIO()
@@ -359,7 +361,7 @@ def test_exact_gate_single_split_agg_is_exchange_free(spark):
     # sf0.001 incoming is far below maxPartitionBytes: fast path taken,
     # no shuffle exchange in the plan (the only Exchange is the gate's
     # broadcast build side)
-    assert capstone._single_split_batch(incoming) is True
+    assert sizing.collapse_if_one_split(incoming) is not incoming
     fast = ingest_pipeline_batch(incoming, idx, min_words=MIN_WORDS)
     plan = _plan(fast)
     assert "Coalesce" in plan
@@ -367,12 +369,12 @@ def test_exact_gate_single_split_agg_is_exchange_free(spark):
 
     # force the gate shut (probe monkeypatched to "too big"): the
     # distributed aggregate and its exchange come back
-    saved = capstone._single_split_batch
-    capstone._single_split_batch = lambda df: False
+    saved = sizing.collapse_if_one_split
+    sizing.collapse_if_one_split = lambda df: df
     try:
         slow = ingest_pipeline_batch(incoming, idx, min_words=MIN_WORDS)
     finally:
-        capstone._single_split_batch = saved
+        sizing.collapse_if_one_split = saved
     plan = _plan(slow)
     assert "Coalesce" not in plan
     assert "hashpartitioning(source" in plan
@@ -385,4 +387,5 @@ def test_exact_gate_single_split_agg_is_exchange_free(spark):
         spark.readStream.schema(incoming.schema)
         .parquet("/root/testdata/sf0.001")
     )
-    assert capstone._single_split_batch(stream) is False
+    assert sizing.plan_size_bytes(stream) is None
+    assert sizing.collapse_if_one_split(stream) is stream

@@ -80,30 +80,33 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
     )
 
     spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
-    for t in ("ev_bucketed_a", "ev_bucketed_agg"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-    import shutil
+    # managed tables live in a database under tmp_path, so no run sees
+    # another's files and nothing lands in the shared warehouse
+    db = "bucketed_plan_test"
+    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    spark.sql(f"CREATE DATABASE {db} LOCATION '{tmp_path / db}'")
+    try:
+        ev = load_table(spark, SMOKE, "events").select(
+            "event_id", "user_id", "event_type", "value"
+        )
+        write_bucketed(ev, f"{db}.ev_bucketed_a", "user_id", num_buckets=8,
+                       sort_col="event_id")
+        write_bucketed(
+            ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n")),
+            f"{db}.ev_bucketed_agg", "user_id", num_buckets=8,
+        )
+        a = read_bucketed(spark, f"{db}.ev_bucketed_a")
+        b = read_bucketed(spark, f"{db}.ev_bucketed_agg")
 
-    shutil.rmtree("/root/repo/spark-warehouse", ignore_errors=True)
-    ev = load_table(spark, SMOKE, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    write_bucketed(ev, "ev_bucketed_a", "user_id", num_buckets=8,
-                   sort_col="event_id")
-    write_bucketed(
-        ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n")),
-        "ev_bucketed_agg", "user_id", num_buckets=8,
-    )
-    a = read_bucketed(spark, "ev_bucketed_a")
-    b = read_bucketed(spark, "ev_bucketed_agg")
+        joined = a.join(b, "user_id")
+        assert _count_shuffles(joined) == 0, _explain_str(joined)
+        assert joined.count() == ev.count()
 
-    joined = a.join(b, "user_id")
-    assert _count_shuffles(joined) == 0, _explain_str(joined)
-    assert joined.count() == ev.count()
-
-    # groupBy on the bucket key: no exchange either
-    agg = a.groupBy("user_id").agg(F.sum("value").alias("s"))
-    assert _count_shuffles(agg) == 0
+        # groupBy on the bucket key: no exchange either
+        agg = a.groupBy("user_id").agg(F.sum("value").alias("s"))
+        assert _count_shuffles(agg) == 0
+    finally:
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
 
 
 def test_triples_summary_single_scan_two_shuffles(spark):

@@ -1770,17 +1770,17 @@ def test_automation_oracle_replays_python_walk(duck):
 
 
 def test_pin_if_large_gates_on_size_estimate(spark):
-    """_pin_if_large (r12): the multi-consumer pin must DECLINE at local
+    """sizing.pin_if_large: the multi-consumer pin must DECLINE at local
     scale (plan byte-identical, no cache) and APPLY on a corpus-sized
     estimate — the scale-adaptive persist behind lsh_candidate_pairs'
     band self-join and winnow_copy_pairs' fingerprint self-join."""
-    from fireball_data_processing_spark.operators.dedup import _pin_if_large
+    from fireball_data_processing_spark.sizing import pin_if_large
 
     small = spark.range(10)
-    assert _pin_if_large(small) is small  # gate declines: frame untouched
+    assert pin_if_large(small) is small  # gate declines: frame untouched
 
     big = spark.range(1 << 33)  # ~64 GiB Catalyst estimate (8 B/row)
-    pinned = _pin_if_large(big)
+    pinned = pin_if_large(big)
     try:
         assert pinned.storageLevel.useMemory or pinned.storageLevel.useDisk
     finally:
