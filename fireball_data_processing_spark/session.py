@@ -11,6 +11,13 @@ working on a large cluster:
 - shuffle partitions sized for local runs but overridable via env; on a real
   cluster AQE coalesces, so a high static number is safe.
 - Arrow enabled for every pandas_udf / applyInPandas edge.
+- the generated-code cache holds the catalog's working set. Spark keeps
+  each compiled whole-stage-codegen class in an LRU keyed by its source,
+  capped at 100 entries by default; one pass of nine event queries needs
+  171 classes, so a long-lived session cycling through them missed on
+  nearly every lookup and paid a Janino compile plus a fresh JIT on every
+  repeated query. 4096 is above the ~3,300 compilations one pass over the
+  whole catalog makes, so a warm query compiles nothing.
 """
 
 from __future__ import annotations
@@ -22,6 +29,10 @@ from pyspark.sql import SparkSession
 # Default parallelism: local[$SPARK_GRAFT_CPUS], else every core this host
 # has.
 _DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+# Compiled-class cache entries (a static conf: read once, at the first
+# codegen in the JVM); see the module docstring.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def get_spark(
@@ -62,6 +73,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

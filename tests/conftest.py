@@ -17,6 +17,15 @@ from fireball_data_processing_spark.sources.tables import TABLES
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 SMOKE_DIR = "/root/testdata/sf0.001"
 
+# One catalog query per events module (heuristics, incremental, distill,
+# as-of, runs, windows, markov, funnel, star join): the set the benchmark's
+# events_olap workload times and checks against its oracle.
+EVENTS_OLAP_QUERIES = (
+    "heuristics_matrix", "incremental_heuristics_merge", "triples_summary",
+    "asof_state_backward", "run_lengths", "history_window_sums",
+    "markov_stationary_profile", "funnel_conversion_steps", "revenue_by_nation",
+)
+
 
 @pytest.fixture(scope="session")
 def spark():

@@ -343,7 +343,7 @@ def test_exact_gate_single_split_agg_is_exchange_free(spark):
     one scan split aggregates WITHOUT a shuffle exchange (coalesce(1)
     satisfies the groupBy's clustering requirement), a too-big/unknown
     estimate keeps the distributed aggregate, and the rows are identical
-    either way (r13; guide §2.4 — remove shuffles outright)."""
+    either way."""
     import contextlib
     import io
 

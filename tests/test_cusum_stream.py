@@ -15,8 +15,7 @@ from fireball_data_processing_spark.streaming.cusum_stream import (
     stream_rate_deltas,
 )
 
-pytestmark = pytest.mark.slow  # driver-budget split (r13): long
-# end-to-end runs excluded from the default suite; run with -m slow
+pytestmark = pytest.mark.slow  # runs streams end to end; run with -m slow
 
 DAY = 86400 * 10**9
 SCHEMA = "ts bigint, x int"

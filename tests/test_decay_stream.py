@@ -15,8 +15,7 @@ from fireball_data_processing_spark.streaming.decay_stream import (
     stream_decay_deltas,
 )
 
-pytestmark = pytest.mark.slow  # driver-budget split (r13): long
-# end-to-end runs excluded from the default suite; run with -m slow
+pytestmark = pytest.mark.slow  # runs streams end to end; run with -m slow
 
 DAY = 86400 * 10**9
 T0 = 1700000000 * 10**9

@@ -20,8 +20,7 @@ from fireball_data_processing_spark.streaming.drift_stream import (
     score_windows_psi,
 )
 
-pytestmark = pytest.mark.slow  # driver-budget split (r13): long
-# end-to-end runs excluded from the default suite; run with -m slow
+pytestmark = pytest.mark.slow  # runs streams end to end; run with -m slow
 
 SMOKE = "/root/testdata/sf0.001"
 S = SYNTHETIC_STREAM

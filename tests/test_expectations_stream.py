@@ -20,8 +20,7 @@ from fireball_data_processing_spark.streaming.expectations_stream import (
     run_expectation_gate,
 )
 
-pytestmark = pytest.mark.slow  # driver-budget split (r13): long
-# end-to-end runs excluded from the default suite; run with -m slow
+pytestmark = pytest.mark.slow  # runs streams end to end; run with -m slow
 
 _SCHEMA = "id long, val long"
 

@@ -10,21 +10,19 @@ import math
 
 import pandas as pd
 import pytest
+from conftest import EVENTS_OLAP_QUERIES
 
 from fireball_data_processing_spark import queries as catalog
 
-# Driver-budget split (r13): this module replays the DRIVER'S OWN t2
-# gate (every oracle query vs DuckDB at sf0.01 — ~850 s of the suite,
-# the PCA-trajectory oracles alone 100–190 s each), so inside the
-# driver's pytest run it duplicates a check the driver performs
-# independently on every round. The whole module is marked slow: it
-# still gates every build locally (`-m slow`, plus
-# scripts/drive_contract.py which runs the same comparison
-# standalone), and the default suite keeps the operator/unit/plan
-# coverage the driver does NOT replicate.
-pytestmark = pytest.mark.slow
-
-ORACLE_QUERIES = [n for n, s in catalog.REGISTRY.items() if s.oracle is not None]
+# The full replay takes ~850 s at sf0.01 (the PCA-trajectory oracles alone
+# 100-190 s each) and repeats the comparison scripts/drive_contract.py makes
+# standalone, so it is marked slow case by case. The events queries stay in
+# the default run as a parity smoke: each oracle takes under a second.
+ORACLE_QUERIES = [
+    pytest.param(n, marks=() if n in EVENTS_OLAP_QUERIES else pytest.mark.slow)
+    for n, s in catalog.REGISTRY.items()
+    if s.oracle is not None
+]
 
 
 def _canon(df: pd.DataFrame) -> pd.DataFrame:

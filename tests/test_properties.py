@@ -21,8 +21,7 @@ from pyspark.sql import functions as F
 
 from fireball_data_processing_spark.operators.asof import asof_join, nearest_join
 
-pytestmark = pytest.mark.slow  # driver-budget split (r13): long
-# end-to-end runs excluded from the default suite; run with -m slow
+pytestmark = pytest.mark.slow  # one Spark round-trip per generated example; run with -m slow
 
 SETTINGS = dict(
     max_examples=12,

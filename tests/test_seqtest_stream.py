@@ -16,8 +16,7 @@ from fireball_data_processing_spark.streaming.seqtest_stream import (
     stream_sprt_deltas,
 )
 
-pytestmark = pytest.mark.slow  # driver-budget split (r13): long
-# end-to-end runs excluded from the default suite; run with -m slow
+pytestmark = pytest.mark.slow  # runs streams end to end; run with -m slow
 
 SCHEMA = "g bigint, o bigint, x int"
 ARGS = dict(p0=0.15, p1=0.25, alpha=0.05, beta=0.05)

@@ -119,8 +119,7 @@ def test_open_event_stream_payload_envelope(spark):
 
 import pytest
 
-pytestmark = pytest.mark.slow  # driver-budget split (r13): long
-# end-to-end runs excluded from the default suite; run with -m slow
+pytestmark = pytest.mark.slow  # runs streams end to end; run with -m slow
 
 
 @pytest.mark.parametrize("gate", ["exact", "near"])

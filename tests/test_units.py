@@ -196,7 +196,7 @@ def test_rh_signature_matches_python_reference(spark, sf_dir):
 
 
 def test_rh_signature_constant_plan_size_at_dim_768(spark):
-    # VERDICT r1 item 1: the signature must compile at real embedding dims.
+    # The signature must compile at real embedding dims.
     # The hyperplane matrix is one folded literal; the optimized plan must
     # contain no per-component expression (no element_at chain) and the
     # lambda-function count must not grow with dim.
@@ -245,7 +245,7 @@ def test_rh_signature_length_mismatch_contributes_zero(spark):
 def test_ivf_index_partition_pruning(spark, sf_dir, tmp_path):
     # build phase persists assignments partitioned by cell; the query phase
     # must reach the parquet scan with a PartitionFilters entry on cell so
-    # unprobed cells are never read (VERDICT r1 item 2)
+    # unprobed cells are never read
     from fireball_data_processing_spark.operators.similarity import (
         build_ivf_index,
         brute_force_topk,

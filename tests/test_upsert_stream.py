@@ -15,8 +15,7 @@ from fireball_data_processing_spark.streaming.upsert_stream import (
     upsert_parquet_sink,
 )
 
-pytestmark = pytest.mark.slow  # driver-budget split (r13): long
-# end-to-end runs excluded from the default suite; run with -m slow
+pytestmark = pytest.mark.slow  # runs streams end to end; run with -m slow
 
 SCHEMA = "doc_id bigint, text string, version bigint"
 
